@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.operators.Merge
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -67,12 +68,10 @@ object LiveFeed {
     *
     * PARTITION-INCREMENTAL: `storedDir` must be a `day=`-partitioned
     * Parquet dataset (write the seed with `.partitionBy("day")`). Each
-    * micro-batch reads ONLY the partitions whose days appear in the batch
-    * (partition-pruned scan), merges them, and republishes ONLY those
-    * partitions — I/O per batch is O(touched days), not O(store), which is
-    * what survives a 100 TB store. The reference rewrites one whole
-    * per-symbol file per trade (`update_live_price.py:289-292`); this is
-    * the same replace idea at day-partition granularity.
+    * micro-batch reads and republishes ONLY the partitions whose days
+    * appear in the batch (see [[startUpsertFrom]]). The reference rewrites
+    * one whole per-symbol file per trade (`update_live_price.py:289-292`);
+    * this is the same replace idea at day-partition granularity.
     */
   def startUpsert(
       spark: SparkSession,
@@ -93,6 +92,15 @@ object LiveFeed {
     * [[readTradesFeed]] to run the reference's E2 pipeline end-to-end
     * in-engine: DSv2 poll feed → validity → watermark → per-day merge.
     *
+    * `storedDir` must exist, with its final schema, when the stream starts:
+    * the schema is resolved from it once, and every epoch reads only the
+    * `day=<yyyy-MM-dd>` directories its batch touches, by path, against
+    * that schema. Listing and footer I/O per epoch are therefore
+    * O(touched days), not O(store); a touched day the store lacks reads as
+    * empty and is created by the publish. Each micro-batch is persisted
+    * for the epoch, so the dead-letter write, the touched-day collect and
+    * the merge share one scan of the source.
+    *
     * @param deadLetterDir when set, each micro-batch's INVALID rows
     *        (null/NaN price, null ts) are written there as Parquet keyed
     *        by batch_id — the streaming dead-letter analogue of the
@@ -111,10 +119,11 @@ object LiveFeed {
     // Heal any mid-swap crash from a previous run BEFORE the first batch:
     // an interrupted publish leaves a partition aside-copied and invisible,
     // and merging against the partial store would lose its rows.
-    graft.sources.AtomicSwap.recover(
-      new org.apache.hadoop.fs.Path(storedDir).getFileSystem(
-        spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(storedDir))
+    val root = new Path(storedDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.sources.AtomicSwap.recover(fs, root)
+    // The only whole-store listing and footer read of the stream's life.
+    val storedSchema = spark.read.parquet(storedDir).schema
     trades
       .withWatermark("ts", "1 day")
       .writeStream
@@ -122,47 +131,55 @@ object LiveFeed {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (raw: DataFrame, batchId: Long) =>
-        deadLetterDir.foreach { d =>
-          // Keyed by batch id with dynamic partition overwrite so an
-          // at-least-once replay of the epoch REWRITES its own partition
-          // instead of appending duplicate reject rows.
-          invalidTrades(raw)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(d)
-        }
-        val batch = validTrades(raw)
-        val incoming = batch
-          .select(col("symbol"), to_date(col("ts")).as("day"), col("price"), col("ts"))
-        // The touched-day list is partition METADATA, not data: bounded by
-        // the watermark (~2 calendar days per batch), same driver-side
-        // footprint dynamic partition overwrite itself needs.
-        val days = incoming.select("day").distinct().collect().map(_.getDate(0))
-        if (days.nonEmpty) {
-          val stored = spark.read.parquet(storedDir)
-            .filter(col("day").isin(days.toIndexedSeq: _*)) // partition-pruned
-          val merged = Merge
-            .upsertDailyClose(stored, incoming, Seq("symbol", "day"), "price", "ts", "adj_close")
-          // Crash-safe per-partition publish mirroring the reference's
-          // tmp+os.replace (`ulp:289-292`) at day granularity: stage the
-          // touched partitions, then aside-swap each one into place
-          // (graft.sources.AtomicSwap — every crash window is recoverable
-          // by AtomicSwap.recover at restart). Untouched partitions are
-          // never read, written, or renamed.
-          val tmp = storedDir + ".tmp"
-          merged.write.mode("overwrite").partitionBy("day").parquet(tmp)
-          val fs = new org.apache.hadoop.fs.Path(storedDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("day="))
-            .foreach { part =>
-              graft.sources.AtomicSwap.publish(fs, part.getPath,
-                new org.apache.hadoop.fs.Path(storedDir, part.getPath.getName))
-            }
-          fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        }
+        // The dead-letter write, the day collect and the merge all read the
+        // batch; persisted, they share one scan of the source.
+        raw.persist()
+        try {
+          deadLetterDir.foreach { d =>
+            // Keyed by batch id with dynamic partition overwrite so an
+            // at-least-once replay of the epoch REWRITES its own partition
+            // instead of appending duplicate reject rows.
+            invalidTrades(raw)
+              .withColumn("batch_id", lit(batchId))
+              .write.mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy("batch_id")
+              .parquet(d)
+          }
+          val incoming = validTrades(raw)
+            .select(col("symbol"), to_date(col("ts")).as("day"), col("price"), col("ts"))
+          // The touched-day list is partition METADATA, not data: bounded by
+          // the watermark (~2 calendar days per batch), same driver-side
+          // footprint dynamic partition overwrite itself needs.
+          val days = incoming.select(col("day").cast("string")).distinct().collect()
+            .map(_.getString(0))
+          if (days.nonEmpty) {
+            // Touched days by path, against the schema resolved at start:
+            // no epoch lists the store or infers a schema from footers.
+            val paths = days.toIndexedSeq.map(d => new Path(root, s"day=$d"))
+              .filter(fs.exists).map(_.toString)
+            val stored =
+              if (paths.isEmpty) spark.createDataFrame(java.util.List.of[Row](), storedSchema)
+              else spark.read.schema(storedSchema).option("basePath", storedDir).parquet(paths: _*)
+            val merged = Merge
+              .upsertDailyClose(stored, incoming, Seq("symbol", "day"), "price", "ts", "adj_close")
+            // Crash-safe per-partition publish mirroring the reference's
+            // tmp+os.replace (`ulp:289-292`) at day granularity: stage the
+            // touched partitions, then aside-swap each one into place
+            // (graft.sources.AtomicSwap — every crash window is recoverable
+            // by AtomicSwap.recover at restart). Untouched partitions are
+            // never read, written, or renamed.
+            val tmp = new Path(storedDir + ".tmp")
+            merged.write.mode("overwrite").partitionBy("day").parquet(tmp.toString)
+            fs.listStatus(tmp)
+              .filter(s => s.isDirectory && s.getPath.getName.startsWith("day="))
+              .foreach { part =>
+                graft.sources.AtomicSwap.publish(
+                  fs, part.getPath, new Path(root, part.getPath.getName))
+              }
+            fs.delete(tmp, true)
+          }
+        } finally raw.unpersist()
         ()
       }
       .start()

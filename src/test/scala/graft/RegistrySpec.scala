@@ -23,6 +23,19 @@ class RegistrySpec extends SparkSpec {
     assert(stray.isEmpty, s"headline names not in registry: $stray")
   }
 
+  test("compact bench line keeps a failed pinned query as -1 instead of dropping it") {
+    val failed = Bench.pinned.head
+    val results = (1 to 20).map(i => s"q$i" -> i.toDouble) ++
+      Bench.pinned.map(p => p -> (if (p == failed) -1.0 else 0.01)) :+ ("qfail" -> -1.0)
+    val got = Bench.compactQueries(results)
+    assert(got.map(_._1).distinct.size == got.size)
+    assert(got.take(15).map(_._1) == (20 to 6 by -1).map(i => s"q$i"))
+    assert(Bench.pinned.forall(got.toMap.contains))
+    assert(got.toMap.get(failed).contains(-1.0))
+    // an unpinned failure is not a comparator row
+    assert(!got.toMap.contains("qfail"))
+  }
+
   test("PLANS.md selection rule: every PlanSpec-asserted registry query is " +
     "annotated in graft.Plans (a reviewer can resolve any name to either " +
     "a ran-plan or the explicit exclusion rule)") {
